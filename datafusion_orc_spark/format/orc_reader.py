@@ -658,6 +658,45 @@ class OrcReader:
                 )
         return self._stripe_stats
 
+    def _prune_ids(self, prune: dict[str, tuple] | None) -> dict[int, tuple]:
+        """{column name: bounds} -> {orc column id: bounds}; names this
+        file lacks are dropped."""
+        if not prune:
+            return {}
+        root = self.footer.types[0]
+        names = root.field_names
+        return {root.subtypes[names.index(c)]: b for c, b in prune.items() if c in names}
+
+    def stripes_may_match(
+        self, prune: dict[str, tuple] | None, stripes: list[int] | None = None
+    ) -> list[int]:
+        """The stripe indices (of ``stripes``, default all) whose Metadata
+        statistics cannot rule out every value in the ``prune`` bounds —
+        the one stripe check shared by split planning (driver) and
+        iter_stripes (task). Conservative: a stripe without stats, or a
+        column the file lacks, always survives; an empty bound
+        (lo > hi) matches nothing."""
+        idxs = list(range(len(self.footer.stripes)) if stripes is None else stripes)
+        prune_ids = self._prune_ids(prune)
+        if not prune_ids:
+            return idxs
+        if any(
+            lo is not None and hi is not None and lo > hi for lo, hi in prune_ids.values()
+        ):
+            return []
+        from datafusion_orc_spark.format.orc_index import _bounds_may_match
+
+        sstats = self.stripe_statistics()
+        return [
+            si
+            for si in idxs
+            if si >= len(sstats)
+            or all(
+                col >= len(sstats[si]) or _bounds_may_match(sstats[si][col], lo, hi)
+                for col, (lo, hi) in prune_ids.items()
+            )
+        ]
+
     def _subtree_ids(self, col: int) -> set[int]:
         """All ORC type ids in the subtree rooted at ``col`` (pre-order
         tree: nested LIST/MAP/STRUCT/UNION children carry their own
@@ -791,13 +830,9 @@ class OrcReader:
             needed_ids = {0}
             for i in sel:
                 needed_ids |= self._subtree_ids(root.subtypes[i])
-        idxs = range(len(self.footer.stripes)) if stripes is None else stripes
-        prune_ids = (
-            {root.subtypes[names.index(c)]: b for c, b in prune.items() if c in names}
-            if prune
-            else {}
-        )
-        sstats = self.stripe_statistics() if prune_ids else []
+        # stripes whose Metadata stats prove no match: zero reads
+        idxs = self.stripes_may_match(prune, stripes)
+        prune_ids = self._prune_ids(prune)
         if needed_ids is not None and prune_ids:
             # prune columns may sit outside the projection; their
             # ROW_INDEX streams must still be fetched for group pruning
@@ -805,15 +840,6 @@ class OrcReader:
         stride = self.footer.row_index_stride
         for si in idxs:
             info = self.footer.stripes[si]
-            if prune_ids and si < len(sstats):
-                from datafusion_orc_spark.format.orc_index import _bounds_may_match
-
-                st = sstats[si]
-                if any(
-                    col < len(st) and not _bounds_may_match(st[col], lo, hi)
-                    for col, (lo, hi) in prune_ids.items()
-                ):
-                    continue  # whole stripe provably misses: zero reads
             sr = _StripeReader(self, info, needed_ids)
             row_ranges = None
             if prune_ids and stride:

@@ -27,6 +27,7 @@ reference's projection pushdown (file_source.rs:95-102).
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -786,7 +787,23 @@ def roundtrip_files(
     return sdf.mapInArrow(rt, out_schema)
 
 
-_PRED_RE = None
+_IDENT = r"[A-Za-z_][\w.]*"
+_CMP = r">=|<=|==|=|<|>"
+_FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<="}
+_PRED_RE = re.compile(
+    rf"^\s*(?:(?P<col>{_IDENT})\s*(?P<op>{_CMP})\s*(?P<val>-?\d+)"
+    rf"|(?P<val2>-?\d+)\s*(?P<op2>{_CMP})\s*(?P<col2>{_IDENT}))\s*$"
+)
+# quoted spans: string literals (doubled-quote and backslash escapes) and
+# backticked identifiers, masked before any keyword or comparison is read
+_QUOTED_RE = re.compile(r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"|`(?:[^`]|``)*`", re.S)
+# a BETWEEN's own AND, marked so the conjunct split leaves the band whole
+_BETWEEN_AND_RE = re.compile(r"(\bbetween\s+[-+]?[\w.']+\s+)and\b", re.IGNORECASE)
+_BAND = "\x00"
+_BETWEEN_RE = re.compile(
+    rf"^\s*(?P<col>{_IDENT})\s+between\s+(?P<lo>[-+]?\d+)\s+{_BAND}\s+(?P<hi>[-+]?\d+)\s*$",
+    re.IGNORECASE,
+)
 
 
 def prune_bounds_from_predicate(where: str) -> dict[str, tuple[int, int]]:
@@ -794,33 +811,26 @@ def prune_bounds_from_predicate(where: str) -> dict[str, tuple[int, int]]:
     simple integer comparisons in a SQL predicate string.
 
     Only conjuncts of the form ``col <op> <int>`` / ``<int> <op> col``
-    (op in <, <=, >, >=, =) contribute; everything else is ignored —
-    pruning is best-effort, the caller re-applies the full predicate on
-    the decoded rows (decode_table(where=...) does both automatically).
-    OR anywhere in the predicate disables pruning entirely (a disjunct
-    can rescue rows a conjunct-derived bound would drop)."""
-    import re
-
-    global _PRED_RE
-    if _PRED_RE is None:
-        _PRED_RE = re.compile(
-            r"^\s*(?:(?P<col>[A-Za-z_][\w.]*)\s*(?P<op>>=|<=|=|==|<|>)\s*(?P<val>-?\d+)"
-            r"|(?P<val2>-?\d+)\s*(?P<op2>>=|<=|=|==|<|>)\s*(?P<col2>[A-Za-z_][\w.]*))\s*$"
-        )
-    if re.search(r"\bor\b", where, flags=re.IGNORECASE):
+    (op in <, <=, >, >=, =) and ``col BETWEEN <int> AND <int>`` (read as
+    ``col >= a AND col <= b``, so ``BETWEEN 9 AND 3`` is an empty range)
+    contribute; everything else is ignored — pruning is best-effort, the
+    caller re-applies the full predicate on the decoded rows
+    (decode_table(where=...) does both automatically). Quoted literals
+    are masked first: words and comparisons inside a string never count.
+    ``NOT BETWEEN`` and a ``NOT``-prefixed conjunct derive nothing. OR
+    anywhere, or NOT over a parenthesized group, disables pruning
+    entirely (a disjunct can rescue rows a conjunct-derived bound would
+    drop)."""
+    masked = _QUOTED_RE.sub("''", where)
+    if re.search(r"\bor\b|(?:\bnot|!)\s*\(", masked, flags=re.IGNORECASE):
         return {}
+    masked, n_bands = _BETWEEN_AND_RE.subn(rf"\g<1>{_BAND}", masked)
+    if len(re.findall(r"\bbetween\b", masked, flags=re.IGNORECASE)) != n_bands:
+        return {}  # a band bounded by an expression: its AND cannot be told apart
     out: dict[str, list] = {}
     _LO, _HI = -(1 << 62), (1 << 62)
-    for conj in re.split(r"\band\b", where, flags=re.IGNORECASE):
-        m = _PRED_RE.match(conj.strip().strip("()"))
-        if not m:
-            continue
-        if m.group("col"):
-            col, op, val = m.group("col"), m.group("op"), int(m.group("val"))
-        else:
-            # mirrored literal-first form: flip the operator
-            col, val = m.group("col2"), int(m.group("val2"))
-            op = {"<": ">", ">": "<", "<=": ">=", ">=": "<="}.get(m.group("op2"), m.group("op2"))
+
+    def narrow(col: str, op: str, val: int) -> None:
         lo, hi = out.get(col, [_LO, _HI])
         if op in ("=", "=="):
             lo, hi = max(lo, val), min(hi, val)
@@ -833,6 +843,23 @@ def prune_bounds_from_predicate(where: str) -> dict[str, tuple[int, int]]:
         elif op == "<=":
             hi = min(hi, val)
         out[col] = [lo, hi]
+
+    for conj in re.split(r"\band\b", masked, flags=re.IGNORECASE):
+        conj = conj.strip().strip("()")
+        b = _BETWEEN_RE.match(conj)
+        if b:
+            narrow(b.group("col"), ">=", int(b.group("lo")))
+            narrow(b.group("col"), "<=", int(b.group("hi")))
+            continue
+        m = _PRED_RE.match(conj)
+        if not m:
+            continue
+        if m.group("col"):
+            narrow(m.group("col"), m.group("op"), int(m.group("val")))
+        else:
+            # mirrored literal-first form: flip the operator
+            op = _FLIP.get(m.group("op2"), m.group("op2"))
+            narrow(m.group("col2"), op, int(m.group("val2")))
     return {c: (lo, hi) for c, (lo, hi) in out.items()}
 
 

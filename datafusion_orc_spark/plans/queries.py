@@ -820,8 +820,9 @@ _PRUNE_LO, _PRUNE_HI = 20_000, 25_000
 
 def q_orc_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Foreign-file D19: scan an ORC-Java-WRITTEN file with OUR reader
-    using statistics pushdown — stripes are skipped from the Metadata
-    stats with zero reads, row groups from ROW_INDEX (conservative);
+    using statistics pushdown derived from ``where=`` — stripes are
+    dropped at split planning from the Metadata stats (never scheduled),
+    row groups from ROW_INDEX (conservative);
     the exact predicate is re-applied on the returned rows, so the
     result matches the oracle bit-for-bit regardless of how much the
     stats pruned."""
@@ -843,15 +844,16 @@ def q_orc_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.repartition(2).sortWithinPartitions("l_orderkey").write.mode(
             "overwrite"
         ).option("compression", "snappy").orc(out)
+    # the scan derives its stripe bounds from the predicate and
+    # re-applies it exactly, so the band is written once
     df = read_orc_distributed(
-        spark, f"{out}/*.orc", prune={"l_orderkey": (_PRUNE_LO, _PRUNE_HI)}
+        spark, f"{out}/*.orc", where=f"l_orderkey BETWEEN {_PRUNE_LO} AND {_PRUNE_HI}"
     )
     df.createOrReplaceTempView("lineitem_orc_pruned")
     return spark.sql(
-        f"SELECT l_returnflag, COUNT(*) AS n, CAST(SUM(l_quantity) AS BIGINT) AS sum_qty "
-        f"FROM lineitem_orc_pruned "
-        f"WHERE l_orderkey BETWEEN {_PRUNE_LO} AND {_PRUNE_HI} "
-        f"GROUP BY l_returnflag ORDER BY l_returnflag"
+        "SELECT l_returnflag, COUNT(*) AS n, CAST(SUM(l_quantity) AS BIGINT) AS sum_qty "
+        "FROM lineitem_orc_pruned "
+        "GROUP BY l_returnflag ORDER BY l_returnflag"
     )
 
 

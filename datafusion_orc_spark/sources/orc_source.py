@@ -82,13 +82,23 @@ def merge_schemas(schemas: list[pa.Schema]) -> pa.Schema:
 META_FETCH_CONCURRENCY = 8
 
 
-def plan_splits(paths: list[str], split_bytes: int = DEFAULT_SPLIT_BYTES, opener=None):
+def plan_splits(
+    paths: list[str],
+    split_bytes: int = DEFAULT_SPLIT_BYTES,
+    opener=None,
+    prune: dict | None = None,
+):
     """Tail-read every file (metadata only, concurrently), return
     (splits, merged_schema).
 
     Each split is (path, first_stripe, n_stripes): contiguous stripes of
     one file packed up to ``split_bytes`` of stripe data — so one huge
     multi-stripe file fans out over many tasks instead of one straggler.
+    ``prune``: {column: (lo, hi)} — stripes whose Metadata statistics
+    prove no match (OrcReader.stripes_may_match) never enter a split, so
+    they are never scheduled; a pruned stripe ends its run of contiguous
+    stripes. A file with no surviving stripe (or none at all) still
+    contributes its schema to the merge.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -98,25 +108,30 @@ def plan_splits(paths: list[str], split_bytes: int = DEFAULT_SPLIT_BYTES, opener
 
     def fetch(p):
         r = OrcReader(p, opener=opener)
-        return r.schema(), r.footer.stripes
+        return r.schema(), r.footer.stripes, r.stripes_may_match(prune)
 
     with ThreadPoolExecutor(min(META_FETCH_CONCURRENCY, max(1, len(ordered)))) as ex:
         metas = list(ex.map(fetch, ordered))
 
     schemas = []
     splits: list[tuple[str, int, int]] = []
-    for p, (schema, stripes) in zip(ordered, metas):
+    for p, (schema, stripes, keep) in zip(ordered, metas):
         schemas.append(schema)
-        start, acc = 0, 0
-        for i, info in enumerate(stripes):
+        start, n, acc = 0, 0, 0
+        for i in keep:
+            if n and i != start + n:  # a pruned stripe ends the run
+                splits.append((p, start, n))
+                n = 0
+            if not n:
+                start, acc = i, 0
+            info = stripes[i]
             acc += info.index_length + info.data_length + info.footer_length
+            n += 1
             if acc >= split_bytes:
-                splits.append((p, start, i - start + 1))
-                start, acc = i + 1, 0
-        if start < len(stripes):
-            splits.append((p, start, len(stripes) - start))
-        if not stripes:
-            splits.append((p, 0, 0))  # schema-only file: contributes 0 rows
+                splits.append((p, start, n))
+                n = 0
+        if n:
+            splits.append((p, start, n))
     return splits, merge_schemas(schemas)
 
 
@@ -134,13 +149,16 @@ def read_orc_distributed(
     """Scan ORC files with OUR reader, one task per stripe-range.
 
     ``where``: a SQL predicate string — simple integer comparison
-    conjuncts are auto-derived into ``prune`` bounds (same parser as
-    decode_table(where=)) and the FULL predicate is re-applied exactly
+    conjuncts and ``col BETWEEN <int> AND <int>`` are auto-derived into
+    ``prune`` bounds (same parser as decode_table(where=); quoted
+    literals are ignored) and the FULL predicate is re-applied exactly
     on the scanned rows, so pruning is pure speedup, never semantics.
-    ``prune``: {column: (lo, hi)} statistics pushdown — each task skips
-    stripes via the file Metadata stats (zero reads) and row groups via
-    ROW_INDEX (format/orc_reader.py iter_stripes); conservative, callers
-    re-apply the exact predicate on the returned rows.
+    ``prune``: {column: (lo, hi)} statistics pushdown — stripes whose
+    file Metadata stats prove no match are dropped at split planning on
+    the driver and never scheduled as tasks; inside surviving stripes
+    each task drops row groups via ROW_INDEX (format/orc_reader.py
+    iter_stripes); conservative, callers re-apply the exact predicate
+    on the returned rows.
 
     ``columns`` is the projection pushed into the per-stripe decode
     (name -> ORC column mask, the physical_exec.rs:69-78 analogue);
@@ -193,7 +211,7 @@ def read_orc_distributed(
                 f"'{file_extension}' (e.g. {bad[0]!r}); pass file_extension=None "
                 f"to scan anyway"
             )
-    splits, merged = plan_splits(paths, split_bytes, opener)
+    splits, merged = plan_splits(paths, split_bytes, opener, prune)
     if columns is not None:
         merged = pa.schema([merged.field(c) for c in columns])
     # Spark's Arrow bridge rejects nanosecond timestamps: surface ORC
@@ -213,10 +231,9 @@ def read_orc_distributed(
     # Exchange over the (tiny) split list: an extra stage barrier + AQE
     # replan per scan, the exact scheduler tax encode_files removes the
     # same way (operators/encode.py parallelize slicing)
+    # (a scan every stripe of which was pruned keeps one empty partition)
     sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(p, s, n) for p, s, n in splits], len(splits)
-        ),
+        spark.sparkContext.parallelize(splits, max(1, len(splits))),
         "path string, first_stripe int, n_stripes int",
     )
     _ensure_workers_can_import(sdf)
@@ -228,8 +245,6 @@ def read_orc_distributed(
             for path, first, cnt in zip(
                 b.column(0).to_pylist(), b.column(1).to_pylist(), b.column(2).to_pylist()
             ):
-                if cnt == 0:
-                    continue
                 r = OrcReader(path, opener=opener)
                 have = set(r.schema().names)
                 local_cols = [c for c in out_names if c in have]

@@ -2,8 +2,11 @@
 the distributed ORC scan (reference parity: physical_exec.rs:79-82 byte
 ranges, file_source.rs:31 batched streams, file_format.rs:90-103 merge)."""
 
+import glob
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.orc
 import pytest
 
@@ -136,12 +139,60 @@ def test_where_auto_prunes_and_filters_exactly(spark, tmp_path):
     d = str(tmp_path / "t")
     spark.range(100000).selectExpr(
         "id as k", "repeat(cast(id as string), 18) as pad"
-    ).coalesce(1).write.option("orc.stripe.size", 262144).orc(d)
+    ).coalesce(1).write.option("orc.stripe.size", 32768).orc(d)  # 20 stripes
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
     df = read_orc_distributed(spark, f"{d}/*.orc", where="k >= 55000 and k < 55200")
     ks = sorted(r["k"] for r in df.collect())
     assert ks == list(range(55000, 55200))
+
+    # BETWEEN bounds prune at split planning: with one stripe per split,
+    # the partitions are exactly the stripes whose k range meets the band
+    (path,) = glob.glob(f"{d}/*.orc")
+    f = pyarrow.orc.ORCFile(path)
+    k_ranges = []
+    for i in range(f.nstripes):
+        k = f.read_stripe(i, columns=["k"]).column(0)
+        k_ranges.append((pc.min(k).as_py(), pc.max(k).as_py()))
+    lo, hi = 40000, 60000
+    meets = [mn <= hi and mx >= lo for mn, mx in k_ranges]
+    assert 0 < sum(meets) < f.nstripes
+    df = read_orc_distributed(spark, f"{d}/*.orc", split_bytes=1, where=f"k BETWEEN {lo} AND {hi}")
+    assert df.rdd.getNumPartitions() == sum(meets)
+    ks = sorted(r["k"] for r in df.select("k").collect())
+    assert ks == list(range(lo, hi + 1))
+
+    # a band no stripe can match (or an inverted, empty one): no rows,
+    # merged columns
+    for band in ("k between 200000 and 300000", f"k BETWEEN {hi} AND {lo}"):
+        df = read_orc_distributed(spark, f"{d}/*.orc", where=band)
+        assert df.columns == ["k", "pad"]
+        assert df.count() == 0
+
+    # a stripe-less (schema-only) file in the glob still merges its schema
+    empty = pa.table({"k": pa.array([], pa.int64()), "extra": pa.array([], pa.string())})
+    pyarrow.orc.write_table(empty, f"{d}/empty.orc")
+    assert OrcReader(f"{d}/empty.orc").footer.stripes == []
+    df = read_orc_distributed(spark, f"{d}/*.orc", where=f"k BETWEEN {lo} AND {lo + 9}")
+    assert set(df.columns) == {"k", "pad", "extra"}
+    rows = df.collect()
+    assert sorted(r["k"] for r in rows) == list(range(lo, lo + 10))
+    assert all(r["extra"] is None for r in rows)
+
+
+def test_where_quoted_literal_derives_no_bound(spark, tmp_path):
+    """A comparison inside a string literal is not a predicate: it must
+    not prune stripes the real predicate keeps (every row here)."""
+    n = 3000
+    path = str(tmp_path / "t.orc")
+    write_orc(
+        pa.table({"doc_id": [f"d{i}" for i in range(n)], "n_tok": np.arange(10, 10 + n)}),
+        path,
+        stripe_rows=1000,
+    )
+    where = "doc_id <> 'x and n_tok = 3 and y'"
+    assert spark.read.orc(path).filter(where).count() == n
+    assert read_orc_distributed(spark, path, where=where).count() == n
 
 
 def test_register_orc_matches_reference_example(spark):

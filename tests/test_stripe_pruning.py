@@ -69,6 +69,48 @@ def test_prune_bounds_from_predicate_parser():
     # OR disables pruning entirely (a disjunct can rescue dropped rows)
     assert prune_bounds_from_predicate("l_orderkey > 100 OR l_partkey = 1") == {}
 
+    big = 1 << 62
+    cases = [
+        # BETWEEN in any case, inside parentheses, with negative literals
+        ("k BETWEEN 10 AND 20", {"k": (10, 20)}),
+        ("k between -5 and -1 AND j = 2", {"k": (-5, -1), "j": (2, 2)}),
+        ("(k BeTwEeN -30 And 7) and (j > 0)", {"k": (-30, 7), "j": (1, big)}),
+        ("k BETWEEN 0 AND 100 AND k < 50", {"k": (0, 49)}),
+        # an inverted band is an empty range
+        ("k BETWEEN 9 AND 3", {"k": (9, 3)}),
+        # NOT BETWEEN and a NOT-prefixed conjunct derive no bound
+        ("k NOT BETWEEN 3 AND 9", {}),
+        ("NOT k BETWEEN 3 AND 9 AND j = 1", {"j": (1, 1)}),
+        ("NOT k = 3 AND j < 5", {"j": (-big, 4)}),
+        ("NOT (k = 3 AND j = 4)", {}),
+        # a band bounded by non-integers or an expression derives nothing
+        ("x BETWEEN 1.5 AND 2.5 AND k = 5", {"k": (5, 5)}),
+        ("x BETWEEN y + 1 AND 9 AND k = 5", {}),
+    ]
+    for where, want in cases:
+        assert prune_bounds_from_predicate(where) == want, where
+
+
+def test_prune_bounds_ignore_quoted_literals():
+    """Words and comparisons inside string literals are not predicate
+    text: they must never become stripe bounds."""
+    from datafusion_orc_spark.operators.encode import prune_bounds_from_predicate
+
+    assert prune_bounds_from_predicate("doc_id <> 'x and n_tok = 3 and y'") == {}
+    assert prune_bounds_from_predicate("doc_id = 'a or b' AND n_tok >= 4") == {
+        "n_tok": (4, 1 << 62)
+    }
+    # doubled-quote and backslash escapes stay inside the literal
+    assert prune_bounds_from_predicate("doc_id <> 'it''s and n_tok = 3' AND j = 2") == {"j": (2, 2)}
+    assert prune_bounds_from_predicate(r"doc_id <> 'a\' and n_tok = 3' AND j = 2") == {"j": (2, 2)}
+    assert prune_bounds_from_predicate("doc_id = '' AND n_tok = 3 AND src = ''") == {"n_tok": (3, 3)}
+    assert prune_bounds_from_predicate("doc_id <> 'n_tok BETWEEN 1 AND 2'") == {}
+    # Spark also reads "..." as a string; a backticked name may hold a quote
+    assert prune_bounds_from_predicate('doc_id <> "x and n_tok = 3"') == {}
+    assert prune_bounds_from_predicate("`it's` = 1 AND n_tok = 3 AND s <> 'a'") == {
+        "n_tok": (3, 3)
+    }
+
 
 def test_decode_where_auto_prunes_and_filters(spark):
     """decode_table(where=...) derives stripe pruning from the predicate
