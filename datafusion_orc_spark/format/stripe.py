@@ -63,10 +63,8 @@ CODECS = {
     # less vector pass
     "int_rle2u": 12,
     "arr_int_rle2u": 13,
-    # PFOR with unlimited exceptions (codecs/pfor.py) — beats ORC's
-    # PATCHED_BASE on Zipf-skewed token distributions (>31 outliers/512)
-    "int_pfor": 14,
-    "arr_int_pfor": 15,
+    # ids 14/15 (int_pfor, arr_int_pfor) are retired: no writer ever
+    # emitted them in a v2 blob, and they must never be reused
     # RUN+FoR (codecs/runfor.py): long runs as side lists + FoR/PFOR
     # literals — smaller AND ~5x faster than RLEv2 on token streams
     "int_runfor": 16,
@@ -173,8 +171,11 @@ def _assemble(codec: str, n_rows: int, n_nulls: int, streams: list[tuple[int, by
 
 
 def _parse(blob: bytes) -> tuple[str, int, int, dict[int, bytes]]:
-    assert blob[0] == FORMAT_VERSION, f"bad stripe blob version {blob[0]}"
-    codec = CODEC_NAMES[blob[1]]
+    if blob[0] != FORMAT_VERSION:
+        raise ValueError(f"stripe blob: version byte 0 is {blob[0]}, expected {FORMAT_VERSION}")
+    codec = CODEC_NAMES.get(blob[1])
+    if codec is None:
+        raise ValueError(f"stripe blob: unknown codec id {blob[1]} in byte 1")
     n_rows = int.from_bytes(blob[2:6], "little")
     n_nulls = int.from_bytes(blob[6:10], "little")
     n_streams = blob[10]
@@ -374,12 +375,6 @@ def _decode_column_ranged(
 def _int_data_decode(codec: str, streams: dict[int, bytes], n: int) -> np.ndarray:
     if codec.endswith("int_for_bp"):
         return _decode_for_bp(streams[K_META], streams[K_DATA], n)
-    if codec.endswith("int_pfor"):
-        from datafusion_orc_spark.codecs.pfor import pfor_decode
-
-        return pfor_decode(
-            streams[K_META], streams[K_DATA], streams[K_EXC_POS], streams[K_EXC_HIGH], n
-        )
     if codec.endswith("int_runfor"):
         from datafusion_orc_spark.codecs.runfor import runfor_decode
 
@@ -572,7 +567,7 @@ def decode_column(
             buf = pa.py_buffer(np.ascontiguousarray(full).tobytes())
         return pa.Array.from_buffers(out_typ, n, [_validity_buffer(valid), buf])
 
-    if codec in ("int_rle2", "int_rle2u", "int_for_bp", "int_pfor", "int_runfor"):
+    if codec in ("int_rle2", "int_rle2u", "int_for_bp", "int_runfor"):
         vals = _int_data_decode(codec, streams, n_dense)
         if pa.types.is_date32(typ):
             return expand_primitive(vals.astype(np.int32), pa.int32()).cast(typ)
@@ -613,7 +608,7 @@ def decode_column(
         )
         return arr.cast(typ) if arr.type != typ else arr
 
-    if codec in ("arr_int_rle2", "arr_int_rle2u", "arr_int_pfor", "arr_int_for_bp", "arr_int_runfor", "arr_float_raw"):
+    if codec in ("arr_int_rle2", "arr_int_rle2u", "arr_int_for_bp", "arr_int_runfor", "arr_float_raw"):
         lengths = rle_v2_decode(streams[K_LENGTH], n_dense, signed=False)
         n_items = int(lengths.sum())
         child_typ = typ.value_type

@@ -44,6 +44,8 @@ from pyspark.sql.types import (
 )
 
 from datafusion_orc_spark.format.stripe import decode_stripe, encode_stripe
+from datafusion_orc_spark.sources.objectstore import open_parquet, resolve_store
+from datafusion_orc_spark.sources.parts import PartWriter, iter_decoded_stripes
 
 BLOB_SCHEMA = StructType(
     [
@@ -130,6 +132,30 @@ def _blob_batch(stripe_id: int, part_id: int, blobs: dict[str, bytes], stats: li
     )
 
 
+def _stripes(batches: Iterator[pa.RecordBatch], stripe_rows: int) -> Iterator[pa.RecordBatch]:
+    """Re-slice Arrow batches into stripes of exactly ``stripe_rows``
+    rows, the last one shorter: stripe contents depend only on the row
+    sequence, never on how the input was batched."""
+    buf: list[pa.RecordBatch] = []
+    buffered = 0
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        buf.append(batch)
+        buffered += batch.num_rows
+        if buffered >= stripe_rows:
+            table = pa.Table.from_batches(buf).combine_chunks()
+            pos = 0
+            while table.num_rows - pos >= stripe_rows:
+                yield table.slice(pos, stripe_rows).to_batches()[0]
+                pos += stripe_rows
+            tail = table.slice(pos)
+            buf = [b for b in tail.to_batches() if b.num_rows] if tail.num_rows else []
+            buffered = tail.num_rows
+    if buffered:
+        yield pa.Table.from_batches(buf).combine_chunks().to_batches()[0]
+
+
 def _encode_stream(
     batches: Iterator[pa.RecordBatch],
     stripe_rows: int,
@@ -146,53 +172,28 @@ def _encode_stream(
     each split a 65536-stripe window — overflowing into the next split's
     window would silently collide stripe_ids, so it raises instead)."""
     seq = seq_start
-    buf: list[pa.RecordBatch] = []
-    buffered = 0
-
-    def flush(final: bool) -> Iterator[pa.RecordBatch]:
-        nonlocal seq, buf, buffered
-        if not buf:
-            return
-        table = pa.Table.from_batches(buf).combine_chunks()
-        pos = 0
-        # emit full stripes; keep a partial tail buffered unless final
-        while table.num_rows - pos >= stripe_rows or (final and pos < table.num_rows):
-            take = min(stripe_rows, table.num_rows - pos)
-            stripe = table.slice(pos, take).to_batches()[0]
-            blobs, stats = encode_stripe(stripe, namespace=f"{job_token:04x}")
-            # layout: token(16) << 47 | part(16) << 31 | seq(31) = 63
-            # bits, always positive in int64. seq at 31 bits carries
-            # 2^15 split windows x 2^16 stripes per task (the r7 sf3
-            # probe overflowed the old 24-bit seq at 256 splits/task —
-            # a 2.5B-token input at parallelism 2)
-            if part_id >= (1 << 16) or seq >= (1 << 31):
-                raise ValueError(
-                    f"stripe_id packing overflow: part_id={part_id} (max 65535), "
-                    f"seq={seq} (max {(1 << 31) - 1}) — widen the packing before "
-                    f"running with >65536 partitions"
-                )
-            if seq_end is not None and seq >= seq_end:
-                raise ValueError(
-                    f"stripe_id packing overflow: seq={seq} reached this split's "
-                    f"window end {seq_end} (65536 stripes/split) — raise "
-                    f"stripe_rows or lower row_groups_per_split"
-                )
-            stripe_id = (job_token << 47) | (part_id << 31) | seq
-            seq += 1
-            pos += take
-            yield _blob_batch(stripe_id, part_id, blobs, stats)
-        tail = table.slice(pos)
-        buf = [b for b in tail.to_batches() if b.num_rows] if tail.num_rows else []
-        buffered = tail.num_rows
-
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        buf.append(batch)
-        buffered += batch.num_rows
-        if buffered >= stripe_rows:
-            yield from flush(final=False)
-    yield from flush(final=True)
+    for stripe in _stripes(batches, stripe_rows):
+        blobs, stats = encode_stripe(stripe, namespace=f"{job_token:04x}")
+        # layout: token(16) << 47 | part(16) << 31 | seq(31) = 63
+        # bits, always positive in int64. seq at 31 bits carries
+        # 2^15 split windows x 2^16 stripes per task (the r7 sf3
+        # probe overflowed the old 24-bit seq at 256 splits/task —
+        # a 2.5B-token input at parallelism 2)
+        if part_id >= (1 << 16) or seq >= (1 << 31):
+            raise ValueError(
+                f"stripe_id packing overflow: part_id={part_id} (max 65535), "
+                f"seq={seq} (max {(1 << 31) - 1}) — widen the packing before "
+                f"running with >65536 partitions"
+            )
+        if seq_end is not None and seq >= seq_end:
+            raise ValueError(
+                f"stripe_id packing overflow: seq={seq} reached this split's "
+                f"window end {seq_end} (65536 stripes/split) — raise "
+                f"stripe_rows or lower row_groups_per_split"
+            )
+        stripe_id = (job_token << 47) | (part_id << 31) | seq
+        seq += 1
+        yield _blob_batch(stripe_id, part_id, blobs, stats)
 
 
 def encode_table(df: DataFrame, stripe_rows: int = DEFAULT_STRIPE_ROWS, job_token: int | None = None) -> DataFrame:
@@ -272,40 +273,13 @@ def encode_files(
     """
     import uuid as _uuid
 
-    import pyarrow.parquet as _pq
-
-    from datafusion_orc_spark.sources.objectstore import resolve_store
-
     if job_token is None:
         job_token = _uuid.uuid4().int & 0xFFFF
     job_token &= 0xFFFF
 
-    # listing through the object-store seam: local paths behave exactly
-    # as before (glob), s3://-style URIs list/glob through fsspec or
-    # pyarrow.fs (ref object_store_reader.rs:39-59 — one IO trait
-    # serves listing, metadata, and data reads alike)
-    if isinstance(path_or_glob, (list, tuple)):
-        paths = sorted(path_or_glob)
-    else:
-        in_store, norm = resolve_store(path_or_glob)
-        if any(c in norm for c in "*?["):
-            paths = in_store.glob(norm)
-        elif in_store.isdir(norm):
-            paths = in_store.list(norm, suffix=".parquet")
-        else:
-            paths = [norm]
-    if not paths:
-        raise FileNotFoundError(path_or_glob)
-
-    def _open_meta(p: str):
-        st, np_ = resolve_store(p)
-        if type(st).__name__ == "LocalStore":
-            return _pq.ParquetFile(np_)  # let Arrow C++ own the fd
-        return _pq.ParquetFile(st.open_input(np_))
-
     splits: list[tuple[str, int, int]] = []
-    for p in paths:
-        n_rg = _open_meta(p).metadata.num_row_groups
+    for p in _list_inputs(path_or_glob):
+        n_rg = open_parquet(p).metadata.num_row_groups
         for start in range(0, n_rg, row_groups_per_split):
             splits.append((p, start, min(row_groups_per_split, n_rg - start)))
 
@@ -318,13 +292,8 @@ def encode_files(
     # barrier + AQE replan per encode job, pure scheduler tax on a job
     # whose row data never touches the JVM
     n_parts = min(parallelism if parallelism else len(splits), len(splits))
-    if n_parts < len(splits):
-        # strided reorder so each contiguous parallelize-slice gets a
-        # round-robin sample of files (balances skewed file sizes the way
-        # repartition's round-robin did, without the shuffle)
-        splits = [splits[i] for k in range(n_parts) for i in range(k, len(splits), n_parts)]
     sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
+        spark.sparkContext.parallelize(_strided(splits, n_parts), n_parts),
         "path string, rg_start int, n_rg int",
     )
     _ensure_workers_can_import(sdf)
@@ -363,14 +332,12 @@ def encode_files(
                 if pid >= n_parts or p.endswith(".tmp"):
                     _os.unlink(p)
     stats_schema = StructType([f for f in BLOB_SCHEMA.fields if f.name != "data"])
+    keep_blobs = output_dir is None and not discard_output
 
     def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as _pa
-        import pyarrow.parquet as pq
 
         from pyspark import TaskContext
-
-        from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
 
         # one worker = one core: N workers each spawning pyarrow's
         # default cpu_count-sized thread pool oversubscribes the box N×
@@ -378,101 +345,36 @@ def encode_files(
         _pa.set_cpu_count(1)
         _pa.set_io_thread_count(2)
 
-        out_store = out_path = None
-        if output_dir is not None:
-            out_store, out_path = resolve_store(output_dir)
-            out_store.makedirs(out_path)
-        part_id = TaskContext.get().partitionId()
-        # retries never recycle: attempt 0 may have died mid-write, so the
-        # in-place file could be half-written — a retry rewrites it through
-        # an attempt-suffixed tmp + rename instead (ADVICE r6; speculation
-        # is rejected driver-side)
-        task_attempt = TaskContext.get().attemptNumber()
-        recycle_this_attempt = recycle_output and task_attempt == 0
-        k = 0
+        tc = TaskContext.get()
+        part_id = tc.partitionId()
         # byte-rolled output: blob batches stream into one open part
-        # file across splits and the file rolls once ``bytes_per_file``
-        # is reached, so a task emits few LARGE part files instead of
-        # one file per row-group split — at sf1 that is 32 ~150 MB
-        # files instead of 640 ~7 MB ones. Object stores and
-        # shuffle-free decode scans both want big files; roll points
-        # are deterministic (split order and encoded sizes are), so
-        # recycle re-runs still overwrite the exact same names in
-        # place.
-        # Streaming writer state: blob batches append to ONE open
-        # ParquetWriter (a row group per append) and the file rolls to
-        # the next name once ``bytes_per_file`` is reached — stores
-        # spread across the task's whole lifetime instead of bursting
-        # the full buffered file at task end (8 balanced tasks used to
-        # finish together and issue a synchronized multi-GB store
-        # storm; writeback-sensitive walls paid it), and the task never
-        # holds more than one blob batch in write-side memory. Blob
-        # bytes are already entropy-packed: snappy on top wastes CPU
-        # for ~0% gain.
-        writer = None  # open pq.ParquetWriter for the current part file
-        writer_fh = None  # underlying file object (recycle/object-store)
-        writer_tmp = None  # tmp name awaiting rename (atomic local mode)
-        written_bytes = 0
-        file_seq = 0
-
-        def _open_writer():
-            nonlocal writer, writer_fh, writer_tmp
-            name = f"part-{part_id:05d}-{file_seq:03d}.parquet"
-            if recycle_this_attempt and isinstance(out_store, LocalStore):
-                # in-place overwrite: reuse the existing file's
-                # already-faulted page-cache pages (see docstring)
-                import os as _os
-
-                full = f"{out_path}/{name}"
-                writer_fh = open(full, "r+b" if _os.path.exists(full) else "w+b")
-                sink = writer_fh
-            elif isinstance(out_store, LocalStore):
-                # local: write-then-rename for atomic visibility;
-                # attempt-suffixed so a zombie attempt 0 and a retry
-                # never write the same tmp path
-                writer_tmp = f"{out_path}/.{name}.attempt{task_attempt}.tmp"
-                sink = writer_tmp
-            else:
-                # object stores: a single streamed PUT is atomic
-                writer_fh = out_store.open_output(f"{out_path}/{name}")
-                sink = writer_fh
-            writer = pq.ParquetWriter(sink, _BLOB_PA_SCHEMA, compression="none")
-
-        def _close_writer():
-            nonlocal writer, writer_fh, writer_tmp, written_bytes, file_seq
-            if writer is None:
-                return
-            writer.close()
-            if writer_fh is not None:
-                if recycle_this_attempt and isinstance(out_store, LocalStore):
-                    writer_fh.truncate()  # previous run's tail, if longer
-                writer_fh.close()
-                writer_fh = None
-            if writer_tmp is not None:
-                name = f"part-{part_id:05d}-{file_seq:03d}.parquet"
-                out_store.rename(writer_tmp, f"{out_path}/{name}")
-                writer_tmp = None
-            writer = None
-            written_bytes = 0
-            file_seq += 1
-
-        def _emit(bb: pa.RecordBatch):
-            nonlocal written_bytes
-            if writer is None:
-                _open_writer()
-            writer.write_table(pa.Table.from_batches([bb], schema=_BLOB_PA_SCHEMA))
-            written_bytes += bb.nbytes
-            if written_bytes >= bytes_per_file:
-                _close_writer()
-
+        # file across splits (a row group per append) and the file rolls
+        # once ``bytes_per_file`` is reached, so a task emits few LARGE
+        # part files instead of one file per row-group split — at sf1
+        # that is 32 ~150 MB files instead of 640 ~7 MB ones. Object
+        # stores and shuffle-free decode scans both want big files;
+        # roll points are deterministic (split order and encoded sizes
+        # are), so recycle re-runs still overwrite the exact same names
+        # in place. Stores spread across the task's whole lifetime
+        # instead of bursting the full buffered file at task end (8
+        # balanced tasks used to finish together and issue a
+        # synchronized multi-GB store storm; writeback-sensitive walls
+        # paid it), and the task never holds more than one blob batch
+        # in write-side memory. Blob bytes are already entropy-packed:
+        # snappy on top wastes CPU for ~0% gain.
+        writer = None
+        if output_dir is not None:
+            writer = PartWriter(
+                output_dir, part_id, tc.attemptNumber(),
+                bytes_per_file=bytes_per_file, recycle=recycle_output,
+                schema=_BLOB_PA_SCHEMA, compression="none",
+            )
+        k = 0
         for b in batches:
             for path, rg_start, n_rg in zip(
                 b.column(0).to_pylist(), b.column(1).to_pylist(), b.column(2).to_pylist()
             ):
-                in_store, in_path = resolve_store(path)
-                local_in = isinstance(in_store, LocalStore)
-                pf = pq.ParquetFile(in_path if local_in else in_store.open_input(in_path))
-                src = pf.iter_batches(
+                src = open_parquet(path).iter_batches(
                     batch_size=stripe_rows,
                     row_groups=list(range(rg_start, rg_start + n_rg)),
                     columns=columns,
@@ -485,40 +387,119 @@ def encode_files(
                     src, stripe_rows, part_id, job_token,
                     seq_start=k << 16, seq_end=(k + 1) << 16,
                 )
-                if discard_output:
-                    for bb in blob_batches:  # encode fully, keep stats only
-                        yield from pa.Table.from_batches(
-                            [bb], schema=_BLOB_PA_SCHEMA
-                        ).drop_columns("data").to_batches()
-                elif output_dir is None:
-                    yield from blob_batches
-                else:
-                    for bb in blob_batches:
-                        _emit(bb)
-                        yield from pa.Table.from_batches(
-                            [bb], schema=_BLOB_PA_SCHEMA
-                        ).drop_columns("data").to_batches()
                 k += 1
-        _close_writer()
-        if recycle_output and out_store is not None and isinstance(out_store, LocalStore):
-            # task-side stale cleanup: this partition wrote files
-            # 0..file_seq-1; higher file indices are leftovers from a
-            # previous run whose roll layout was longer — remove them
-            # so the directory matches a fresh write exactly
-            import glob as _glob
-            import os as _os
+                for bb in blob_batches:
+                    if keep_blobs:
+                        yield bb
+                        continue
+                    if not discard_output:  # discard: encode fully, keep stats only
+                        writer.write(bb)
+                    yield from pa.Table.from_batches(
+                        [bb], schema=_BLOB_PA_SCHEMA
+                    ).drop_columns("data").to_batches()
+        if writer is not None:
+            writer.close()
 
-            for p in _glob.glob(f"{out_path}/part-{part_id:05d}-*.parquet"):
-                try:
-                    kk = int(p.rsplit("-", 1)[1].split(".")[0])
-                except ValueError:
-                    continue
-                if kk >= file_seq:
-                    _os.unlink(p)
+    return sdf.mapInArrow(enc, BLOB_SCHEMA if keep_blobs else stats_schema)
 
-    return sdf.mapInArrow(
-        enc, BLOB_SCHEMA if output_dir is None and not discard_output else stats_schema
-    )
+
+def _list_inputs(path_or_glob) -> list[str]:
+    """Input parquet paths: a list as given (sorted), a glob, a directory
+    of ``*.parquet``, or one file. Listing goes through the object-store
+    seam: local paths glob, s3://-style URIs list/glob through fsspec or
+    pyarrow.fs (ref object_store_reader.rs:39-59 — one IO trait serves
+    listing, metadata, and data reads alike)."""
+    if isinstance(path_or_glob, (list, tuple)):
+        paths = sorted(path_or_glob)
+    else:
+        in_store, norm = resolve_store(path_or_glob)
+        if any(c in norm for c in "*?["):
+            paths = in_store.glob(norm)
+        elif in_store.isdir(norm):
+            paths = in_store.list(norm, suffix=".parquet")
+        else:
+            paths = [norm]
+    if not paths:
+        raise FileNotFoundError(path_or_glob)
+    return paths
+
+
+def _strided(splits: list, n_parts: int) -> list:
+    """Strided reorder for ``parallelize(splits, n_parts)``: with fewer
+    partitions than splits, each contiguous slice gets a round-robin
+    sample of files (balances skewed file sizes the way repartition's
+    round-robin did, without the shuffle)."""
+    if n_parts >= len(splits):
+        return splits
+    return [splits[i] for k in range(n_parts) for i in range(k, len(splits), n_parts)]
+
+
+def _apportion(sizes: list[int], caps: list[int], budget: int) -> list[int]:
+    """Largest-remainder apportionment of ``budget`` splits over row
+    groups of ``sizes`` rows: group i gets 1..caps[i] splits and the
+    counts sum to exactly ``budget`` (needs len(sizes) <= budget <=
+    sum(caps)). Flooring each quota up to 1 can overshoot; the excess is
+    taken back from the groups with the smallest remainders that hold
+    more than one split (else one partition runs two splits)."""
+    total = max(1, sum(sizes))
+    quota = [min(cap, budget * n / total) for n, cap in zip(sizes, caps)]
+    counts = [max(1, int(q)) for q in quota]
+    rem = [q - int(q) for q in quota]
+    left = budget - sum(counts)
+    while left > 0:
+        for i in sorted(range(len(counts)), key=lambda i: rem[i], reverse=True):
+            if left and counts[i] < caps[i]:
+                counts[i] += 1
+                left -= 1
+    while left < 0:
+        for i in sorted(range(len(counts)), key=lambda i: rem[i]):
+            if left and counts[i] > 1:
+                counts[i] -= 1
+                left += 1
+    return counts
+
+
+def _row_range_splits(
+    rg_sizes: list[tuple[str, int, int]], stripe_rows: int, target: int
+) -> list[tuple[str, int, int, int]]:
+    """(path, rg, n_rows) row groups -> (path, rg, row_start, row_end)
+    splits: one per row group, unless there are fewer row groups than
+    ``target``; then row groups are subdivided into stripe-aligned row
+    ranges, exactly min(target, total stripes) of them.
+
+    Two balance rules (measured on the 6-row-group sf1.0 shape, where
+    the old round()-per-row-group planner made 36 splits for target 32 —
+    so 4 of the 32 static partitions carried TWO splits and the stage
+    wall was 2x a median task):
+     1. apportion split counts by largest remainder (_apportion) so the
+        total is exactly the budget — one split per task, no
+        double-loaded partition;
+     2. ranges are whole stripes, apportioned uniformly by largest
+        remainder (sizes differ by <=1 stripe), remainder stripes
+        assigned to the EARLIEST ranges: a range [s, e) also pays a
+        leading decode ~ e (iter_batches decodes from row 0 up to e),
+        but a per-task least-squares fit on the 6-row-group sf1.0 shape
+        measured that lead at ~0.12 us/row vs ~3 us/row of
+        encode/decode work (4%) — smaller than one stripe's worth of
+        work at bench chunk sizes, so a cost-tapered boundary model
+        snapped to stripe quanta just produced 1-vs-2-stripe jitter
+        (measured 2x task spread at sf0.1); front-loading the remainder
+        stripes counteracts the 4% without breaking the quantum."""
+    if len(rg_sizes) >= target:
+        return [(p, rg, 0, n) for p, rg, n in rg_sizes]
+    n_stripes = [max(1, (n + stripe_rows - 1) // stripe_rows) for _, _, n in rg_sizes]
+    budget = min(target, sum(n_stripes))
+    counts = _apportion([n for _, _, n in rg_sizes], n_stripes, budget)
+    splits: list[tuple[str, int, int, int]] = []
+    for (p, rg, n), n_str, k in zip(rg_sizes, n_stripes, counts):
+        per = [n_str // k + (i < n_str % k) for i in range(k)]
+        pos = 0
+        for c in per:
+            s, e = pos * stripe_rows, min(n, (pos + c) * stripe_rows)
+            if e > s:
+                splits.append((p, rg, s, e))
+            pos += c
+    return splits
 
 
 def roundtrip_files(
@@ -572,103 +553,23 @@ def roundtrip_files(
     """
     import uuid as _uuid
 
-    import pyarrow.parquet as _pq
-
-    from datafusion_orc_spark.sources.objectstore import resolve_store
-
     if job_token is None:
         job_token = _uuid.uuid4().int & 0xFFFF
     job_token &= 0xFFFF
     if (batch_transform is None) != (transform_schema is None):
         raise ValueError("batch_transform and transform_schema must be passed together")
 
-    if isinstance(path_or_glob, (list, tuple)):
-        paths = sorted(path_or_glob)
-    else:
-        in_store, norm = resolve_store(path_or_glob)
-        if any(c in norm for c in "*?["):
-            paths = in_store.glob(norm)
-        elif in_store.isdir(norm):
-            paths = in_store.list(norm, suffix=".parquet")
-        else:
-            paths = [norm]
-    if not paths:
-        raise FileNotFoundError(path_or_glob)
-
-    def _open_pf(p: str):
-        st, np_ = resolve_store(p)
-        if type(st).__name__ == "LocalStore":
-            return _pq.ParquetFile(np_)
-        return _pq.ParquetFile(st.open_input(np_))
-
     target = parallelism or spark.sparkContext.defaultParallelism
     rg_sizes: list[tuple[str, int, int]] = []  # (path, rg, n_rows)
-    for p in paths:
-        md = _open_pf(p).metadata
+    for p in _list_inputs(path_or_glob):
+        md = open_parquet(p).metadata
         for rg in range(md.num_row_groups):
             n = md.row_group(rg).num_rows
             if n:
                 rg_sizes.append((p, rg, n))
-    total_rows = sum(n for _, _, n in rg_sizes)
-    splits: list[tuple[str, int, int, int]] = []  # (path, rg, row_start, row_end)
-    if len(rg_sizes) >= target:
-        splits = [(p, rg, 0, n) for p, rg, n in rg_sizes]
-    else:
-        # parallelism floor: stripe-aligned row-range subdivision.
-        # Two balance rules (measured on the 6-row-group sf1.0 shape,
-        # where the old round()-per-row-group planner made 36 splits for
-        # target 32 — so 4 of the 32 static partitions carried TWO
-        # splits and the stage wall was 2x a median task):
-        #  1. apportion split counts by largest remainder so the total
-        #     is exactly min(target, total stripes) — one split per
-        #     task, no double-loaded partition;
-        #  2. ranges are whole stripes, apportioned uniformly by largest
-        #     remainder (sizes differ by <=1 stripe), remainder stripes
-        #     assigned to the EARLIEST ranges: a range [s, e) also pays
-        #     a leading decode ~ e (iter_batches decodes from row 0 up
-        #     to e), but a per-task least-squares fit on the 6-row-group
-        #     sf1.0 shape measured that lead at ~0.12 us/row vs ~3
-        #     us/row of encode/decode work (4%) — smaller than one
-        #     stripe's worth of work at bench chunk sizes, so a
-        #     cost-tapered boundary model snapped to stripe quanta just
-        #     produced 1-vs-2-stripe jitter (measured 2x task spread at
-        #     sf0.1); front-loading the remainder stripes counteracts
-        #     the 4% without breaking the quantum.
-        n_stripes = {(p, rg): max(1, (n + stripe_rows - 1) // stripe_rows) for p, rg, n in rg_sizes}
-        budget = min(target, sum(n_stripes.values()))
-        quota = {k2: min(n_stripes[k2], budget * rg_n / max(1, total_rows))
-                 for k2, rg_n in (((p, rg), n) for p, rg, n in rg_sizes)}
-        k_of = {k2: max(1, int(q)) for k2, q in quota.items()}
-        left = budget - sum(k_of.values())
-        if left > 0:
-            by_rem = sorted(quota, key=lambda k2: quota[k2] - int(quota[k2]), reverse=True)
-            for k2 in by_rem:
-                if left <= 0:
-                    break
-                if k_of[k2] < n_stripes[k2]:
-                    k_of[k2] += 1
-                    left -= 1
-        for p, rg, n in rg_sizes:
-            k = k_of[(p, rg)]
-            if k <= 1:
-                splits.append((p, rg, 0, n))
-                continue
-            n_str = n_stripes[(p, rg)]
-            per = [n_str // k] * k
-            for i in range(n_str % k):
-                per[i] += 1
-            pos = 0
-            for c in per:
-                if c <= 0:
-                    continue
-                s, e = pos * stripe_rows, min(n, (pos + c) * stripe_rows)
-                if e > s:
-                    splits.append((p, rg, s, e))
-                pos += c
+    splits = _row_range_splits(rg_sizes, stripe_rows, target)
     n_parts = min(len(splits), target)
-    if n_parts < len(splits):
-        # strided reorder: round-robin sample of files per parallelize slice
-        splits = [splits[i] for k in range(n_parts) for i in range(k, len(splits), n_parts)]
+    splits = _strided(splits, n_parts)
     sdf = spark.createDataFrame(
         spark.sparkContext.parallelize(splits, n_parts),
         "path string, rg int, row_start long, row_end long",
@@ -692,9 +593,6 @@ def roundtrip_files(
 
     def rt(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as _pa
-        import pyarrow.parquet as pq
-
-        from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
 
         _pa.set_cpu_count(1)
         _pa.set_io_thread_count(2)
@@ -703,7 +601,7 @@ def roundtrip_files(
             """In-range slices of one row group, streamed; stops decoding
             at the last needed page (rows past r1 are never decoded)."""
             off = 0
-            # batch_size is a read granularity only — stripes() re-slices
+            # batch_size is a read granularity only — _stripes re-slices
             # to exact stripe_rows boundaries, so stripe contents are
             # identical for any batch_size (bigger reads decode ~20%
             # faster on this box)
@@ -716,29 +614,6 @@ def roundtrip_files(
                 off += n
                 if off >= r1:
                     return
-
-        def stripes(src):
-            """Accumulate slices into stripes of ``stripe_rows`` rows
-            (same unit as _encode_stream; deterministic per split)."""
-            buf: list[pa.RecordBatch] = []
-            buffered = 0
-            for b in src:
-                if b.num_rows == 0:
-                    continue
-                buf.append(b)
-                buffered += b.num_rows
-                if buffered >= stripe_rows:
-                    table = pa.Table.from_batches(buf).combine_chunks()
-                    pos = 0
-                    while table.num_rows - pos >= stripe_rows:
-                        yield table.slice(pos, stripe_rows).to_batches()[0]
-                        pos += stripe_rows
-                    tail = table.slice(pos)
-                    buf = [bb for bb in tail.to_batches() if bb.num_rows] if tail.num_rows else []
-                    buffered = tail.num_rows
-            if buffered:
-                table = pa.Table.from_batches(buf).combine_chunks()
-                yield table.to_batches()[0]
 
         # bounded partial-agg buffer: the transform's output rows are
         # PARTIALS the downstream Spark aggregate re-combines, so it is
@@ -767,11 +642,7 @@ def roundtrip_files(
                 b.column(2).to_pylist(),
                 b.column(3).to_pylist(),
             ):
-                in_store, in_path = resolve_store(path)
-                pf = pq.ParquetFile(
-                    in_path if isinstance(in_store, LocalStore) else in_store.open_input(in_path)
-                )
-                for stripe in stripes(ranged(pf, rg, r0, r1)):
+                for stripe in _stripes(ranged(open_parquet(path), rg, r0, r1), stripe_rows):
                     blobs, _stats = encode_stripe(stripe, namespace=ns)
                     dec = decode_stripe(blobs, stripe.schema, columns=names)
                     if do_transform is None:
@@ -900,22 +771,8 @@ def decode_table(
     ``groupBy(stripe_id).applyInArrow`` for blob tables whose stripes
     were scattered across partitions by an arbitrary repartition.
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     _ensure_workers_can_import(blobs_df)
-    if schema is None:
-        schema = to_arrow_schema(spark_schema)
-    if columns is not None:
-        unknown = set(columns) - set(schema.names)
-        if unknown:
-            raise ValueError(f"decode: unknown columns {sorted(unknown)}")
-        # normalize the projection to SCHEMA order: the output StructType
-        # preserves schema order, so the decoded Arrow batches must too (a
-        # caller-order projection decoded fine but mis-bound column
-        # vectors JVM-side)
-        names = [nm for nm in schema.names if nm in set(columns)]
-    else:
-        names = list(schema.names)
+    schema, names = _projection(schema, spark_schema, columns)
     if where is not None:
         # auto-wire stripe pruning from the predicate's simple integer
         # comparisons (the DataSource's pushFilters analogue for the
@@ -923,6 +780,52 @@ def decode_table(
         # the decoded rows below, so pruning is purely an optimization
         auto = prune_bounds_from_predicate(where)
         prune = {**auto, **(prune or {})}
+    blobs_df = _pruned_blobs(blobs_df, prune, columns)
+    if columns is not None:
+        spark_schema = StructType([f for f in spark_schema.fields if f.name in columns])
+
+    if shuffle:
+        proj = pa.schema([schema.field(nm) for nm in names])
+
+        def decode_fn(table: pa.Table) -> pa.Table:
+            # one group = one stripe's blob rows
+            batches = list(iter_decoded_stripes(table.to_batches(), schema, names, prune))
+            return pa.Table.from_batches(batches, schema=proj)
+
+        out = blobs_df.groupBy("stripe_id").applyInArrow(decode_fn, spark_schema)
+    else:
+
+        def decode_local(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            # partition-local group-by: a stripe decodes as soon as all
+            # its projected columns have arrived
+            yield from iter_decoded_stripes(batches, schema, names, prune)
+
+        out = blobs_df.mapInArrow(decode_local, spark_schema)
+    return out.filter(where) if where is not None else out
+
+
+def _projection(schema: pa.Schema | None, spark_schema, columns: list[str] | None) -> tuple[pa.Schema, list[str]]:
+    """-> (Arrow schema, derived from ``spark_schema`` if None; projected
+    names). The projection is normalized to SCHEMA order: the output
+    StructType preserves schema order, so the decoded Arrow batches must
+    too (a caller-order projection decoded fine but mis-bound column
+    vectors JVM-side)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if schema is None:
+        schema = to_arrow_schema(spark_schema)
+    if columns is None:
+        return schema, list(schema.names)
+    unknown = set(columns) - set(schema.names)
+    if unknown:
+        raise ValueError(f"decode: unknown columns {sorted(unknown)}")
+    return schema, [nm for nm in schema.names if nm in set(columns)]
+
+
+def _pruned_blobs(blobs_df: DataFrame, prune: dict | None, columns: list[str] | None) -> DataFrame:
+    """The blob rows a decode needs: stripes whose [vmin, vmax] can meet
+    every ``prune`` bound (a broadcast stripe-id join, so the data bytes
+    of pruned stripes never cross into Python), projected columns only."""
     if prune:
         keep = None
         for col, (lo, hi) in prune.items():
@@ -936,63 +839,7 @@ def decode_table(
         blobs_df = blobs_df.join(F.broadcast(keep.distinct()), "stripe_id")
     if columns is not None:
         blobs_df = blobs_df.filter(F.col("column").isin(columns))
-        spark_schema = StructType([f for f in spark_schema.fields if f.name in columns])
-    expected = set(names)
-
-    prune_cols = dict(prune) if prune else None
-
-    def _stripe_batch(blob_by_col: dict) -> pa.RecordBatch | None:
-        """Decode one stripe, applying sub-block (D19 ROW_INDEX-stride)
-        pruning when bounds are known: blocks whose local [min, max]
-        cannot match are dropped before Arrow assembly; a stripe whose
-        every block fails is skipped outright."""
-        ranges = None
-        if prune_cols:
-            from datafusion_orc_spark.format.stripe import prune_row_ranges
-
-            ranges = prune_row_ranges(blob_by_col, prune_cols)
-            if ranges == []:
-                return None
-        return decode_stripe(blob_by_col, schema, columns=names, row_ranges=ranges)
-
-    if shuffle:
-
-        def decode_fn(table: pa.Table) -> pa.Table:
-            blob_by_col = dict(zip(table.column("column").to_pylist(), table.column("data").to_pylist()))
-            batch = _stripe_batch(blob_by_col)
-            proj = pa.schema([schema.field(nm) for nm in names])
-            return pa.Table.from_batches([batch] if batch is not None else [], schema=proj)
-
-        out = blobs_df.groupBy("stripe_id").applyInArrow(decode_fn, spark_schema)
-        return out.filter(where) if where is not None else out
-
-    def decode_local(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # partition-local group-by: accumulate blob rows per stripe_id,
-        # decode as soon as a stripe has all projected columns
-        pending: dict[int, dict[str, bytes]] = {}
-        for b in batches:
-            sids = b.column("stripe_id").to_pylist()
-            cols = b.column("column").to_pylist()
-            data = b.column("data").to_pylist()
-            for sid, col, blob in zip(sids, cols, data):
-                if col not in expected:
-                    continue
-                got = pending.setdefault(sid, {})
-                got[col] = blob
-                if len(got) == len(expected):
-                    batch = _stripe_batch(got)
-                    if batch is not None:
-                        yield batch
-                    del pending[sid]
-        if pending:
-            raise ValueError(
-                f"decode_table(shuffle=False): stripes {sorted(pending)[:8]} are "
-                f"missing columns within their partition — the blob table was "
-                f"repartitioned after encode; pass shuffle=True"
-            )
-
-    out = blobs_df.mapInArrow(decode_local, spark_schema)
-    return out.filter(where) if where is not None else out
+    return blobs_df
 
 
 # NOTE (r7 advice): ``bytes_written`` reports the UNCOMPRESSED in-memory
@@ -1047,137 +894,32 @@ def decode_to_files(
     ``prune`` bounds are INTEGER-column-only here (bounds are cast with
     int(); string-keyed pruning is supported by read_orc_distributed,
     not by this sink — r7 advice)."""
-    import pyarrow.parquet as pq
-    from pyspark import TaskContext
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from datafusion_orc_spark.format.stripe import decode_stripe, prune_row_ranges
-    from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
-
     _ensure_workers_can_import(blobs_df)
-    if schema is None:
-        schema = to_arrow_schema(spark_schema)
-    if columns is not None:
-        unknown = set(columns) - set(schema.names)
-        if unknown:
-            raise ValueError(f"decode: unknown columns {sorted(unknown)}")
-        # normalize the projection to SCHEMA order: the output StructType
-        # preserves schema order, so the decoded Arrow batches must too (a
-        # caller-order projection decoded fine but mis-bound column
-        # vectors JVM-side)
-        names = [nm for nm in schema.names if nm in set(columns)]
-    else:
-        names = list(schema.names)
-    if prune:
-        keep = None
-        for col, (lo, hi) in prune.items():
-            cond = (
-                (F.col("column") == col)
-                & (F.col("vmax") >= F.lit(int(lo)))
-                & (F.col("vmin") <= F.lit(int(hi)))
-            )
-            ids = blobs_df.filter(cond).select("stripe_id")
-            keep = ids if keep is None else keep.join(ids, "stripe_id")
-        blobs_df = blobs_df.join(F.broadcast(keep.distinct()), "stripe_id")
-    if columns is not None:
-        blobs_df = blobs_df.filter(F.col("column").isin(columns))
-    expected = set(names)
+    schema, names = _projection(schema, spark_schema, columns)
+    blobs_df = _pruned_blobs(blobs_df, prune, columns)
     proj = pa.schema([schema.field(nm) for nm in names])
-    prune_cols = dict(prune) if prune else None
 
     def dec_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as _pa
 
+        from pyspark import TaskContext
+
         _pa.set_cpu_count(1)  # no per-worker thread-pool oversubscription
-        out_store, out_path = resolve_store(output_dir)
-        out_store.makedirs(out_path)
         tc = TaskContext.get()
-        part_id, attempt = tc.partitionId(), tc.attemptNumber()
-        local = isinstance(out_store, LocalStore)
-
-        writer = writer_fh = writer_tmp = None
-        written_bytes = 0
-        total_bytes = 0  # raw Arrow bytes streamed through the writer
-        file_seq = 0
-        n_files = 0
-        n_rows = 0
-
-        def _open():
-            nonlocal writer, writer_fh, writer_tmp
-            name = f"part-{part_id:05d}-{file_seq:03d}.parquet"
-            if local:
-                writer_tmp = f"{out_path}/.{name}.attempt{attempt}.tmp"
-                sink = writer_tmp
-            else:
-                writer_fh = out_store.open_output(f"{out_path}/{name}")
-                sink = writer_fh
-            writer = pq.ParquetWriter(
-                sink, proj, compression=compression,
-                use_dictionary=use_dictionary, write_statistics=write_statistics,
-            )
-
-        def _close():
-            nonlocal writer, writer_fh, writer_tmp, written_bytes, file_seq, n_files, total_bytes
-            if writer is None:
-                return
-            total_bytes += written_bytes
-            writer.close()
-            if writer_fh is not None:
-                writer_fh.close()
-                writer_fh = None
-            if writer_tmp is not None:
-                name = f"part-{part_id:05d}-{file_seq:03d}.parquet"
-                out_store.rename(writer_tmp, f"{out_path}/{name}")
-                writer_tmp = None
-            writer = None
-            written_bytes = 0
-            file_seq += 1
-            n_files += 1
-
-        def _emit(batch: pa.RecordBatch):
-            nonlocal written_bytes, n_rows
-            if writer is None:
-                _open()
-            writer.write_table(pa.Table.from_batches([batch], schema=proj))
-            written_bytes += batch.nbytes
-            n_rows += batch.num_rows
-            if written_bytes >= bytes_per_file:
-                _close()
-
-        pending: dict[int, dict[str, bytes]] = {}
-        total_in = 0
-        for b in batches:
-            sids = b.column("stripe_id").to_pylist()
-            cols = b.column("column").to_pylist()
-            data = b.column("data").to_pylist()
-            for sid, col, blob in zip(sids, cols, data):
-                if col not in expected:
-                    continue
-                got = pending.setdefault(sid, {})
-                got[col] = blob
-                if len(got) == len(expected):
-                    ranges = None
-                    if prune_cols:
-                        ranges = prune_row_ranges(got, prune_cols)
-                    if ranges != []:
-                        batch = decode_stripe(got, schema, columns=names, row_ranges=ranges)
-                        if batch is not None:
-                            _emit(batch)
-                    del pending[sid]
-                    total_in += 1
-        if pending:
-            raise ValueError(
-                f"decode_to_files: stripes {sorted(pending)[:8]} are missing "
-                f"columns within their partition — the blob table was "
-                f"repartitioned after encode; decode with decode_table(shuffle=True)"
-            )
-        _close()
+        writer = PartWriter(
+            output_dir, tc.partitionId(), tc.attemptNumber(),
+            bytes_per_file=bytes_per_file, schema=proj, compression=compression,
+            use_dictionary=use_dictionary, write_statistics=write_statistics,
+        )
+        for batch in iter_decoded_stripes(batches, schema, names, prune):
+            writer.write(batch)
+        writer.close()
         yield pa.record_batch(
             [
-                pa.array([part_id], pa.int32()),
-                pa.array([n_files], pa.int32()),
-                pa.array([n_rows], pa.int64()),
-                pa.array([total_bytes], pa.int64()),
+                pa.array([writer.part], pa.int32()),
+                pa.array([writer.files], pa.int32()),
+                pa.array([writer.rows], pa.int64()),
+                pa.array([writer.arrow_bytes], pa.int64()),
             ],
             names=["part_id", "n_files", "rows", "bytes_written"],
         )

@@ -301,6 +301,15 @@ def resolve_store(path: str):
         ) from exc
 
 
+def open_parquet(path: str):
+    """``pq.ParquetFile`` of ``path`` through its store; a local path is
+    handed over as-is, so Arrow C++ owns the fd."""
+    import pyarrow.parquet as pq
+
+    store, norm = resolve_store(path)
+    return pq.ParquetFile(norm if isinstance(store, LocalStore) else store.open_input(norm))
+
+
 class StoreOpener:
     """Picklable ``path -> seekable file`` callable bound to a store —
     the ``opener`` seam OrcReader / ParquetFile already accept."""

@@ -45,10 +45,12 @@ def write_orc_distributed(
 
     Returns the (lazy) per-file stats DataFrame; the write happens when
     it is consumed (``.collect()``/``.count()`` — same contract as
-    encode_files). Files are written through the object-store seam
-    (local rename-for-atomicity; object stores rely on atomic PUT) and
-    are readable by ORC C++ / ORC-Java / Spark / our own reader
-    (conformance: tests/test_orc_sink.py)."""
+    encode_files). Files are written task-side through the shared
+    ``PartWriter`` (sources/parts.py): attempt-suffixed tmp + rename on
+    local stores, one atomic PUT on object stores, so a retried task and
+    its zombie attempt never share a path. They are readable by ORC C++
+    / ORC-Java / Spark / our own reader (conformance:
+    tests/test_orc_sink.py)."""
     from datafusion_orc_spark.operators.encode import _ensure_workers_can_import
     from datafusion_orc_spark.sources.objectstore import resolve_store
 
@@ -62,46 +64,36 @@ def write_orc_distributed(
         from pyspark import TaskContext
 
         from datafusion_orc_spark.format.orc_writer import write_orc
-        from datafusion_orc_spark.sources.objectstore import LocalStore
+        from datafusion_orc_spark.sources.parts import PartWriter
 
         _pa.set_cpu_count(1)
         _pa.set_io_thread_count(2)
-        part_id = TaskContext.get().partitionId()
-        k = 0
+        tc = TaskContext.get()
+        writer = PartWriter(output_dir, tc.partitionId(), tc.attemptNumber(), ext=".orc")
         pending: list[pa.RecordBatch] = []
         n_pending = 0
         b_pending = 0  # Arrow buffer bytes — rows alone under-bound wide rows
 
-        def flush() -> Iterator[pa.RecordBatch]:
-            nonlocal k, pending, n_pending, b_pending
-            if not pending:
-                return
-            tbl = pa.Table.from_batches(pending)
-            pending, n_pending, b_pending = [], 0, 0
-            name = f"part-{part_id:05d}-{k:03d}.orc"
-            k += 1
-            import io
-
-            buf = io.BytesIO()
+        def write(tbl: pa.Table, dest) -> None:
             write_orc(
-                tbl, buf, stripe_rows=stripe_rows, compression=compression,
+                tbl, dest, stripe_rows=stripe_rows, compression=compression,
                 row_index_stride=row_index_stride,
                 bloom_filter_columns=bloom_filter_columns,
                 bloom_filter_fpp=bloom_filter_fpp,
             )
-            raw = buf.getvalue()
-            if isinstance(store, LocalStore):
-                with open(f"{out_path}/.{name}.tmp", "wb") as fh:
-                    fh.write(raw)
-                store.rename(f"{out_path}/.{name}.tmp", f"{out_path}/{name}")
-            else:
-                with store.open_output(f"{out_path}/{name}") as fh:
-                    fh.write(raw)
+
+        def flush() -> Iterator[pa.RecordBatch]:
+            nonlocal pending, n_pending, b_pending
+            if not pending:
+                return
+            tbl = pa.Table.from_batches(pending)
+            pending, n_pending, b_pending = [], 0, 0
+            path, n_bytes = writer.write_file(tbl, write)
             yield pa.RecordBatch.from_pydict({
-                "path": [f"{out_path}/{name}"],
-                "part": [part_id],
+                "path": [path],
+                "part": [writer.part],
                 "n_rows": [tbl.num_rows],
-                "n_bytes": [len(raw)],
+                "n_bytes": [n_bytes],
                 "n_stripes": [-(-tbl.num_rows // stripe_rows)],
             })
 

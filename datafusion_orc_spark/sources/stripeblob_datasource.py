@@ -49,7 +49,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
+from datafusion_orc_spark.sources.objectstore import resolve_store
 
 
 class _BlobFilePartition(InputPartition):
@@ -106,74 +106,20 @@ class StripeBlobReader(DataSourceReader):
         return [_BlobFilePartition(p) for p in self._files]
 
     def read(self, partition: _BlobFilePartition):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from datafusion_orc_spark.format.stripe import decode_stripe
+        from datafusion_orc_spark.sources.objectstore import open_parquet
+        from datafusion_orc_spark.sources.parts import iter_decoded_stripes
 
         arrow_schema = to_arrow_schema(self._schema)
-        names = list(arrow_schema.names)
-        expected = set(names)
-
-        store, norm = resolve_store(partition.path)
-        pf = pq.ParquetFile(norm if isinstance(store, LocalStore) else store.open_input(norm))
-
-        # Streamed + buffer-backed: iterate parquet row groups, hold each
-        # blob as a memoryview into the Arrow data buffer (the memoryview
-        # pins the batch buffer alive — no per-blob bytes copy), decode a
-        # stripe the moment its projected columns are all present, drop it.
-        pending: dict[int, dict[str, memoryview]] = {}
-        skipped: set[int] = set()
-        for batch in pf.iter_batches(
+        # streamed: iterate the file's parquet row groups and decode each
+        # stripe the moment its projected columns are all present
+        batches = open_parquet(partition.path).iter_batches(
             batch_size=1 << 16,
             columns=["stripe_id", "column", "data", "vmin", "vmax"],
             use_threads=False,
-        ):
-            sids = batch.column(0).to_pylist()
-            cols = batch.column(1).to_pylist()
-            data_arr = batch.column(2)
-            vmins = batch.column(3).to_pylist()
-            vmaxs = batch.column(4).to_pylist()
-            bufs = data_arr.buffers()
-            width = 8 if data_arr.type.equals(pa.large_binary()) else 4
-            off_dt = np.int64 if width == 8 else np.int32
-            offs = np.frombuffer(
-                bufs[1], dtype=off_dt, count=len(data_arr) + 1,
-                offset=data_arr.offset * width,
-            )
-            # pa.Buffer's memoryview is SIGNED ('b'): single-byte indexing
-            # (blob[i]) then yields negative ints for bytes >= 0x80 — the
-            # FSST table deserializer read a 221-symbol count as -35 and
-            # silently decoded every string to b"" (caught at sf0.1, the
-            # first fixture whose doc_id stripes are big enough for the
-            # selector to pick str_fsst). Cast once to unsigned so every
-            # downstream parser sees bytes-like semantics.
-            mv = memoryview(bufs[2]).cast("B")
-            for i, (sid, col) in enumerate(zip(sids, cols)):
-                if sid in skipped or col not in expected:
-                    continue
-                lo, hi = vmins[i], vmaxs[i]
-                if lo is not None and col in self._prune:
-                    plo, phi = self._prune[col]
-                    if (plo is not None and hi < plo) or (phi is not None and lo > phi):
-                        # stripe provably empty under the filters: drop it,
-                        # including columns of it buffered earlier
-                        skipped.add(sid)
-                        pending.pop(sid, None)
-                        continue
-                got = pending.setdefault(sid, {})
-                got[col] = mv[offs[i] : offs[i + 1]]
-                if len(got) == len(expected):
-                    yield decode_stripe(got, arrow_schema, columns=names)
-                    del pending[sid]
-        if pending:
-            raise ValueError(
-                f"stripeblob: {len(pending)} stripe(s) ended the file with "
-                f"missing columns (e.g. {sorted(pending)[:4]}) — blob table "
-                f"is truncated or was rewritten mid-read"
-            )
+        )
+        yield from iter_decoded_stripes(batches, arrow_schema, list(arrow_schema.names), self._prune)
 
 
 class StripeBlobDataSource(DataSource):

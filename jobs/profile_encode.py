@@ -98,7 +98,7 @@ def profile_once(vals, bounds):
     t["  rf.literal-extract"] = time.perf_counter() - t0
 
     from datafusion_orc_spark.codecs.bitpack import bit_pack, bit_widths, closest_fixed_width
-    from datafusion_orc_spark.codecs.pfor import choose_pfor_width
+    from datafusion_orc_spark.codecs.runfor import choose_pfor_width
 
     reduced = lit.view(np.uint32)
     wm = closest_fixed_width(max(1, (int(vmax) - 0).bit_length()))

@@ -94,24 +94,46 @@ def test_encode_files_recycle_rejects_speculation(spark, tmp_path):
 
 
 def test_encode_files_tmp_names_are_attempt_suffixed(spark, tmp_path):
-    """The non-recycle local write path stages through attempt-suffixed
-    tmp names (a zombie attempt and its retry never share a tmp path) and
-    renames to the canonical part name."""
-    from datafusion_orc_spark.operators.encode import encode_files
+    """Every task-side sink (encode_files, decode_to_files,
+    write_orc_distributed) stages local files through attempt-suffixed
+    tmp names (a zombie attempt and its retry never share a tmp path)
+    and renames to the canonical part name: only ``part-*`` files
+    remain, and they read back exactly."""
+    import pyarrow.orc
+
+    from datafusion_orc_spark.operators.encode import decode_to_files, encode_files
+    from datafusion_orc_spark.sources.orc_sink import write_orc_distributed
 
     src = tmp_path / "in"
     src.mkdir()
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array(["a", "b", "c", "d"]),
-            "tokens": pa.array([[1, 2], [3], [4, 5, 6], [7]], pa.list_(pa.int32())),
-            "n_tok": pa.array([2, 1, 3, 1], pa.int32()),
-            "source": pa.array(["s"] * 4),
-        }),
-        str(src / "f.parquet"),
-    )
+    table = pa.table({
+        "doc_id": pa.array(["a", "b", "c", "d"]),
+        "tokens": pa.array([[1, 2], [3], [4, 5, 6], [7]], pa.list_(pa.int32())),
+        "n_tok": pa.array([2, 1, 3, 1], pa.int32()),
+        "source": pa.array(["s"] * 4),
+    })
+    pq.write_table(table, str(src / "f.parquet"))
+
+    def part_files(d, ext):
+        names = sorted(p.name for p in d.iterdir())
+        assert names and all(n.startswith("part-") and n.endswith(ext) for n in names), names
+        return [str(d / n) for n in names]
+
+    def rows(t):
+        return sorted(t.select(table.column_names).to_pylist(), key=lambda r: r["doc_id"])
+
     out = tmp_path / "out"
     encode_files(spark, str(src), output_dir=str(out)).collect()
-    names = sorted(p.name for p in out.iterdir())
-    assert names and all(n.startswith("part-") and n.endswith(".parquet") for n in names)
-    assert not any(".tmp" in n for n in names)
+    blob_files = part_files(out, ".parquet")
+
+    blobs = spark.read.parquet(*blob_files)
+    schema = spark.read.parquet(str(src)).schema
+    dec = tmp_path / "dec"
+    decode_to_files(blobs, schema, str(dec)).collect()
+    back = pa.concat_tables([pq.read_table(f) for f in part_files(dec, ".parquet")])
+    assert rows(back) == rows(table)
+
+    orc = tmp_path / "orc"
+    write_orc_distributed(spark.read.parquet(str(src)), str(orc)).collect()
+    back = pa.concat_tables([pyarrow.orc.ORCFile(f).read() for f in part_files(orc, ".orc")])
+    assert rows(back) == rows(table)

@@ -162,9 +162,9 @@ def test_stripeblob_reader_projection_decodes_subset(spark, monkeypatch):
     decoded_names = []
     real_stripe = stripe_mod.decode_stripe
 
-    def spy_stripe(blobs, schema, columns=None):
+    def spy_stripe(blobs, schema, columns=None, row_ranges=None):
         decoded_names.extend(columns if columns is not None else schema.names)
-        return real_stripe(blobs, schema, columns=columns)
+        return real_stripe(blobs, schema, columns=columns, row_ranges=row_ranges)
 
     monkeypatch.setattr(
         "datafusion_orc_spark.format.stripe.decode_stripe", spy_stripe
@@ -186,8 +186,9 @@ def test_stripeblob_reader_streaming_memory_bound(spark):
     gen = reader.read(reader.partitions()[0])
     first = next(gen)
     # after the first yield, remaining stripes must not all be buffered:
-    # generator state exposes the pending dict via gi_frame locals
-    pending = gen.gi_frame.f_locals["pending"]
+    # the shared decode loop (sources/parts.py iter_decoded_stripes) that
+    # read() delegates to exposes its pending dict via gi_frame locals
+    pending = gen.gi_yieldfrom.gi_frame.f_locals["pending"]
     n_stripes = 2000 // 256 + 2
     assert len(pending) <= 1, f"{len(pending)} stripes buffered"
     rest = list(gen)

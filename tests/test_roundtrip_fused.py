@@ -164,3 +164,20 @@ def test_roundtrip_files_transform_args_must_pair(spark):
         roundtrip_files(
             spark, f"{SF}/lineitem.parquet", None, batch_transform=lambda t: t
         )
+
+
+@pytest.mark.parametrize("sizes", [(1, 1, 3_276_800), (1, 1, 1, 3_276_800)])
+def test_row_range_splits_meet_budget_exactly(sizes):
+    """Tiny row groups floor their split quota up to 1, which pushed the
+    total past the budget (33 and 34 splits for target 32): one
+    partition then ran two splits. The planner must return exactly the
+    budget and cover every row of every row group once."""
+    from datafusion_orc_spark.operators.encode import DEFAULT_STRIPE_ROWS, _row_range_splits
+
+    rg_sizes = [("f.parquet", i, n) for i, n in enumerate(sizes)]
+    splits = _row_range_splits(rg_sizes, DEFAULT_STRIPE_ROWS, 32)
+    assert len(splits) == 32
+    for _p, rg, n in rg_sizes:
+        ranges = sorted((s, e) for _q, r, s, e in splits if r == rg)
+        assert ranges[0][0] == 0 and ranges[-1][1] == n
+        assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))

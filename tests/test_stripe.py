@@ -136,3 +136,14 @@ def test_top_level_api_lazy_and_pyspark_free():
         "assert sorted(d._API)[0] == 'OrcReader'"
     )
     subprocess.run([sys.executable, "-c", code], check=True, cwd="/root/repo")
+
+
+@pytest.mark.parametrize("byte,value,match", [(0, 1, "version"), (1, 14, "codec id 14")])
+def test_bad_blob_header_raises_value_error(byte, value, match):
+    """Header checks are real raises, not asserts, so they survive
+    ``python -O``: a version-1 blob and the retired codec id 14."""
+    blob, _stats = encode_column(pa.array(np.arange(100, dtype=np.int64)))
+    bad = bytearray(blob)
+    bad[byte] = value
+    with pytest.raises(ValueError, match=match):
+        decode_column(bytes(bad), pa.int64())
